@@ -254,74 +254,191 @@ def _trainer_vocab(df, text_col: str, word_freq):
     derived from the corpus."""
     wf = corpus_word_freq(df, text_col=text_col) if word_freq is None \
         else word_freq.select(F.col("word"), F.col("freq"))
-    # lazy: the trainer's first argmax job (or wordpiece's volume
-    # check) materializes it — one fewer blocking driver job; each
-    # trainer's first action has this frame as its only consumer
-    return (wf.select(F.split("word", "").alias("syms"),
-                      F.col("freq").alias("tok_cnt"))
-            .localCheckpoint(eager=False))
+    return wf.select(F.split("word", "").alias("syms"),
+                     F.col("freq").alias("tok_cnt"))
+
+
+#: Largest trainer vocabulary (distinct words) ``bpe_train_merges``
+#: trains on the driver; larger ones take the distributed loop. Basis:
+#: tracemalloc peak over the capped collect plus the incremental
+#: trainer's tables was 909 B per word on 200k synthetic words of 3-12
+#: letters (173 MiB), so the bound caps the driver's Python heap near
+#: 175 MiB.
+_BPE_DRIVER_MAX_WORDS = 200_000
 
 
 def bpe_train_merges(df=None, *, text_col: str = "text", rounds: int = 5,
                      min_count: int = 2, word_freq=None):
-    """Iterative BPE tokenizer training, distributed: ``rounds`` merge
-    steps over the corpus vocabulary (token -> count, symbols array).
+    """BPE tokenizer training: ``rounds`` merge steps over the corpus
+    vocabulary (token -> count, symbols array). Each round merges the
+    most frequent adjacent symbol pair (count desc, then (a, b)
+    ascending) with a greedy left-to-right fold in every word, and
+    training stops early when no pair reaches ``min_count``. Returns
+    the merge table (round, pair, a, b, cnt) — k rows, the training
+    artifact a tokenizer ships; feed the (a, b) columns to
+    ``bpe_encode`` to tokenize a corpus with it.
 
-    Per round: (1) weighted adjacent-symbol-pair counts — an explode
-    over the VOCABULARY (shrunk by the token repetition factor), one
-    hash agg; (2) the argmax pair comes to the driver (one row — merge
-    DECISIONS are index metadata, the same driver-residency call as the
-    IVF codebook); (3) every vocab entry rewrites its symbol array with
-    a greedy left-to-right fold (F.aggregate, pure JVM) and the vocab
-    is localCheckpoint'ed so round k+1's plan does not replay rounds
-    1..k (the connected-components lineage rule). Stops early when no
-    pair reaches ``min_count``. Returns the merge table (round, pair,
-    a, b, cnt) — k rows, the training artifact a tokenizer ships; feed
-    the (a, b) columns to ``bpe_encode`` to tokenize a corpus with it.
+    The vocabulary is built in Spark either way (whitespace words ->
+    one hash agg -> ``split(word, "")``); then one of two paths trains:
+
+      * driver (vocabularies up to ``_BPE_DRIVER_MAX_WORDS`` = 200k
+        distinct words): ONE capped collect (``limit(bound + 1)``)
+        brings the vocabulary to the driver and
+        ``_bpe_train_incremental`` runs every round there, touching
+        only the words that hold the merged pair. A round is then
+        Python work, not a Spark job whose wall time is scheduling
+        rather than compute. The bound is a driver-memory bound:
+        tracemalloc measured 909 B per word (collected rows plus the
+        trainer's tables) on 200k synthetic words, so a bounded
+        vocabulary peaks near 175 MiB of driver Python heap.
+      * distributed (larger vocabularies): per round, weighted
+        adjacent-pair counts (an explode over the vocabulary, one hash
+        agg), the argmax pair comes to the driver (one row), and every
+        vocabulary entry rewrites its symbol array with the same fold
+        in pure JVM (``_merge_fold``). The vocabulary is
+        localCheckpoint'ed each round so round k+1's plan does not
+        replay rounds 1..k (the connected-components lineage rule), and
+        each superseded round's checkpoint is released once its
+        successor is materialized. Above the bound the vocabulary is
+        computed twice (the capped collect, then the loop's first
+        argmax), one extra scan against one job per round.
+
+    Both paths break ties by ascending (a, b): UTF-8 byte order in
+    Spark, code-point order in Python, which agree.
 
     ``word_freq``: optionally start from a pre-computed (word, freq)
     frame (``corpus_word_freq``) instead of scanning the corpus — the
     shared-scan path for multi-trainer comparisons.
 
     No SQL oracle (iterative argmax is not one DuckDB query); exactness
-    is pinned against an independent Python BPE reference in
-    tests/test_functions.py::test_bpe_train_matches_python_reference."""
+    of both paths is pinned against an independent Python BPE reference
+    in tests/test_functions.py::test_bpe_train_matches_python_reference."""
+    import pyarrow as pa
+
     spark = (df if df is not None else word_freq).sparkSession
     vocab = _trainer_vocab(df, text_col, word_freq)
+    rows = vocab.limit(_BPE_DRIVER_MAX_WORDS + 1).collect()
+    if len(rows) <= _BPE_DRIVER_MAX_WORDS:
+        merges = _bpe_train_incremental(rows, rounds, min_count)
+    else:
+        del rows
+        merges = _bpe_train_distributed(vocab, rounds, min_count)
+    # built from an Arrow table, the result is a driver-local relation
+    # that reads without a Spark job; a createDataFrame over the Python
+    # list would parallelize an RDD and pay one job (~0.25 s on a
+    # 2-core local session) on every read
+    cols = list(zip(*merges)) or [()] * 5
+    types = (pa.int32(), pa.string(), pa.string(), pa.string(), pa.int64())
+    return spark.createDataFrame(pa.table(
+        [pa.array(c, t) for c, t in zip(cols, types)],
+        names=["round", "pair", "a", "b", "cnt"]))
+
+
+def _bpe_train_incremental(vocab, rounds: int, min_count: int) -> list:
+    """Driver BPE trainer over collected (syms, tok_cnt) rows.
+
+    Builds a pair -> weighted count table and a pair -> word-index
+    table once; each merge rewrites only the words holding the merged
+    pair, moving each word's count from its old adjacent pairs to its
+    new ones. The best pair comes off a lazy max-heap of
+    (-count, (a, b)) entries: an entry is live while it matches the
+    table, so ties break by ascending (a, b). Returns
+    (round, a + b, a, b, cnt) rows."""
+    import heapq
+    from collections import Counter
+
+    words = [syms or [] for syms, _ in vocab]  # rebound, never mutated
+    freq = [c for _, c in vocab]
+    cnt: dict = {}
+    where: dict = {}
+    for i, syms in enumerate(words):
+        for p in zip(syms, syms[1:]):
+            cnt[p] = cnt.get(p, 0) + freq[i]
+            where.setdefault(p, set()).add(i)
+    heap = [(-n, p) for p, n in cnt.items()]
+    heapq.heapify(heap)
     merges: list[tuple] = []
     for r in range(rounds):
-        n1 = F.greatest(F.size("syms") - 1, F.lit(0))
-        pr = vocab.select(
-            F.explode(F.zip_with(F.slice("syms", 1, n1),
-                                 F.slice("syms", 2, n1),
-                                 lambda a, b: F.struct(a.alias("a"),
-                                                       b.alias("b"))))
-            .alias("p"), "tok_cnt")
-        best = (pr.groupBy("p").agg(F.sum("tok_cnt").alias("cnt"))
-                .orderBy(F.col("cnt").desc(), F.col("p.a"), F.col("p.b"))
-                .first())
-        if best is None or best["cnt"] < min_count:
+        while heap and (heap[0][1] not in where
+                        or cnt[heap[0][1]] != -heap[0][0]):
+            heapq.heappop(heap)  # stale: the count moved or pair is gone
+        if not heap or -heap[0][0] < min_count:
             break
-        a, b = best["p"]["a"], best["p"]["b"]
-        # keep the pair SIDES alongside the concatenation: "the" could
-        # be t+he or th+e — bpe_encode needs the unambiguous (a, b)
-        merges.append((r, a + b, a, b, int(best["cnt"])))
-        merged = F.aggregate(
-            "syms", F.array().cast("array<string>"),
-            lambda acc, x: F.when(
-                (F.size(acc) > 0)
-                & (F.element_at(acc, -1) == F.lit(a)) & (x == F.lit(b)),
-                F.concat(F.slice(acc, 1, F.size(acc) - 1),
-                         F.array(F.lit(a + b)))
-            ).otherwise(F.concat(acc, F.array(x))))
-        # lazy: round r+1's argmax is the single consumer and
-        # materializes this rewrite inside its own job — halves the
-        # blocking jobs per round vs the eager form (the checkpoint
-        # still truncates lineage exactly the same once computed)
-        vocab = (vocab.select(merged.alias("syms"), "tok_cnt")
-                 .localCheckpoint(eager=False))
-    return spark.createDataFrame(
-        merges, "round int, pair string, a string, b string, cnt long")
+        neg, (a, b) = heap[0]
+        merges.append((r, a + b, a, b, -neg))
+        touched = set()
+        for i in list(where[(a, b)]):
+            old, out = words[i], []
+            for x in old:
+                if out and out[-1] == a and x == b:
+                    out[-1] = a + b
+                else:
+                    out.append(x)
+            words[i] = out
+            before = Counter(zip(old, old[1:]))
+            after = Counter(zip(out, out[1:]))
+            for p in before.keys() | after.keys():
+                d = after[p] - before[p]
+                if not d:
+                    continue
+                touched.add(p)
+                cnt[p] = cnt.get(p, 0) + d * freq[i]
+                if not after[p]:
+                    holders = where[p]
+                    holders.discard(i)
+                    if not holders:
+                        del where[p], cnt[p]
+                elif not before[p]:
+                    where.setdefault(p, set()).add(i)
+        for p in touched:
+            if p in where:
+                heapq.heappush(heap, (-cnt[p], p))
+    return merges
+
+
+def _bpe_train_distributed(vocab, rounds: int, min_count: int) -> list:
+    """The per-round Spark loop of ``bpe_train_merges`` (one argmax job
+    per round, the rewrite fused into the next round's job)."""
+    from ..plans.caching import release_checkpoint
+
+    vocab = vocab.localCheckpoint(eager=False)
+    merges: list[tuple] = []
+    prev = None
+    try:
+        for r in range(rounds):
+            n1 = F.greatest(F.size("syms") - 1, F.lit(0))
+            pr = vocab.select(
+                F.explode(F.zip_with(F.slice("syms", 1, n1),
+                                     F.slice("syms", 2, n1),
+                                     lambda a, b: F.struct(a.alias("a"),
+                                                           b.alias("b"))))
+                .alias("p"), "tok_cnt")
+            best = (pr.groupBy("p").agg(F.sum("tok_cnt").alias("cnt"))
+                    .orderBy(F.col("cnt").desc(), F.col("p.a"), F.col("p.b"))
+                    .first())
+            # this argmax materialized ``vocab``: its source can go
+            if prev is not None:
+                release_checkpoint(prev)
+            prev = vocab
+            if best is None or best["cnt"] < min_count:
+                break
+            a, b = best["p"]["a"], best["p"]["b"]
+            # keep the pair SIDES alongside the concatenation: "the"
+            # could be t+he or th+e — bpe_encode needs the unambiguous
+            # (a, b)
+            merges.append((r, a + b, a, b, int(best["cnt"])))
+            # lazy: round r+1's argmax is the single consumer and
+            # materializes this rewrite inside its own job — halves the
+            # blocking jobs per round vs the eager form (the checkpoint
+            # still truncates lineage exactly the same once computed)
+            vocab = (vocab.select(_merge_fold("syms", a, b).alias("syms"),
+                                  "tok_cnt")
+                     .localCheckpoint(eager=False))
+    finally:
+        release_checkpoint(vocab)
+        if prev is not None and prev is not vocab:
+            release_checkpoint(prev)
+    return merges
 
 
 def _merge_fold(syms, a: str, b: str):
@@ -1451,8 +1568,11 @@ def wordpiece_train_merges(df=None, *, text_col: str = "text",
     into a generated VALUES oracle per SF."""
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
+    from ..plans.caching import release_checkpoint
+
     spark = (df if df is not None else word_freq).sparkSession
-    vocab = _trainer_vocab(df, text_col, word_freq)
+    # lazy: the volume check below is its first job and materializes it
+    vocab = _trainer_vocab(df, text_col, word_freq).localCheckpoint(eager=False)
     vol_row = vocab.agg(F.sum(F.col("tok_cnt") * F.size("syms"))
                         .alias("v")).first()
     volume = int(vol_row["v"] or 0)
@@ -1465,53 +1585,63 @@ def wordpiece_train_merges(df=None, *, text_col: str = "text",
             f"(CAST(cnt AS DECIMAL(38,0)) * {_WP_SCORE_SCALE}) div "
             f"(CAST(ca AS DECIMAL(38,0)) * CAST(cb AS DECIMAL(38,0)))")
     merges: list[tuple] = []
-    for r in range(rounds):
-        n1 = F.greatest(F.size("syms") - 1, F.lit(0))
-        # ONE tagged-union explode carries both the adjacent-pair rows
-        # (kind 'p') and the symbol rows (kind 's') through a single
-        # scan of the vocabulary and a single
-        # hash agg — r9: the former two-agg form scanned vocab twice
-        # per round, which also forced an EAGER per-round checkpoint
-        # (two concurrent consumers of a lazy one double-compute the
-        # merge fold); with a single consumer the checkpoint goes lazy
-        # and each round collapses to exactly one blocking job. The
-        # '' sentinel in b cannot collide: '' is never a symbol.
-        pair_structs = F.zip_with(
-            F.slice("syms", 1, n1), F.slice("syms", 2, n1),
-            lambda a, b: F.struct(F.lit("p").alias("k"), a.alias("a"),
-                                  b.alias("b")))
-        sym_structs = F.transform(
-            "syms", lambda s: F.struct(F.lit("s").alias("k"),
-                                       s.alias("a"), F.lit("").alias("b")))
-        ex = vocab.select(
-            F.explode(F.concat(pair_structs, sym_structs)).alias("x"),
-            "tok_cnt")
-        counts = ex.groupBy("x").agg(F.sum("tok_cnt").alias("n"))
-        pairs = (counts.where(F.col("x.k") == "p")
-                 .select(F.struct(F.col("x.a").alias("a"),
-                                  F.col("x.b").alias("b")).alias("p"),
-                         F.col("n").alias("cnt")))
-        syms = counts.where(F.col("x.k") == "s").select(
-            F.col("x.a").alias("s"), F.col("n").alias("sc"))
-        cand = (pairs
-                .join(F.broadcast(syms.select(F.col("s").alias("__a"),
-                                              F.col("sc").alias("ca"))),
-                      F.col("p.a") == F.col("__a"))
-                .join(F.broadcast(syms.select(F.col("s").alias("__b"),
-                                              F.col("sc").alias("cb"))),
-                      F.col("p.b") == F.col("__b"))
-                .where(F.col("cnt") >= min_count)
-                .withColumn("score_micro", score_expr))
-        best = (cand.orderBy(F.col("score_micro").desc(),
-                             F.col("p.a"), F.col("p.b")).first())
-        if best is None:
-            break
-        a, b = best["p"]["a"], best["p"]["b"]
-        merges.append((r, a + b, a, b, int(best["cnt"]),
-                       int(best["score_micro"])))
-        vocab = (vocab.select(_merge_fold("syms", a, b).alias("syms"),
-                              "tok_cnt")
-                 .localCheckpoint(eager=False))
+    prev = None
+    try:
+        for r in range(rounds):
+            n1 = F.greatest(F.size("syms") - 1, F.lit(0))
+            # ONE tagged-union explode carries both the adjacent-pair
+            # rows (kind 'p') and the symbol rows (kind 's') through a
+            # single scan of the vocabulary and a single hash agg: a
+            # two-agg form scans vocab twice per round and so needs an
+            # EAGER per-round checkpoint (two concurrent consumers of a
+            # lazy one double-compute the merge fold); with a single
+            # consumer the checkpoint stays lazy and each round is
+            # exactly one blocking job. The '' sentinel in b cannot
+            # collide: '' is never a symbol.
+            pair_structs = F.zip_with(
+                F.slice("syms", 1, n1), F.slice("syms", 2, n1),
+                lambda a, b: F.struct(F.lit("p").alias("k"), a.alias("a"),
+                                      b.alias("b")))
+            sym_structs = F.transform(
+                "syms", lambda s: F.struct(F.lit("s").alias("k"),
+                                           s.alias("a"), F.lit("").alias("b")))
+            ex = vocab.select(
+                F.explode(F.concat(pair_structs, sym_structs)).alias("x"),
+                "tok_cnt")
+            counts = ex.groupBy("x").agg(F.sum("tok_cnt").alias("n"))
+            pairs = (counts.where(F.col("x.k") == "p")
+                     .select(F.struct(F.col("x.a").alias("a"),
+                                      F.col("x.b").alias("b")).alias("p"),
+                             F.col("n").alias("cnt")))
+            syms = counts.where(F.col("x.k") == "s").select(
+                F.col("x.a").alias("s"), F.col("n").alias("sc"))
+            cand = (pairs
+                    .join(F.broadcast(syms.select(F.col("s").alias("__a"),
+                                                  F.col("sc").alias("ca"))),
+                          F.col("p.a") == F.col("__a"))
+                    .join(F.broadcast(syms.select(F.col("s").alias("__b"),
+                                                  F.col("sc").alias("cb"))),
+                          F.col("p.b") == F.col("__b"))
+                    .where(F.col("cnt") >= min_count)
+                    .withColumn("score_micro", score_expr))
+            best = (cand.orderBy(F.col("score_micro").desc(),
+                                 F.col("p.a"), F.col("p.b")).first())
+            # this argmax materialized ``vocab``: its source can go
+            if prev is not None:
+                release_checkpoint(prev)
+            prev = vocab
+            if best is None:
+                break
+            a, b = best["p"]["a"], best["p"]["b"]
+            merges.append((r, a + b, a, b, int(best["cnt"]),
+                           int(best["score_micro"])))
+            vocab = (vocab.select(_merge_fold("syms", a, b).alias("syms"),
+                                  "tok_cnt")
+                     .localCheckpoint(eager=False))
+    finally:
+        release_checkpoint(vocab)
+        if prev is not None and prev is not vocab:
+            release_checkpoint(prev)
     return spark.createDataFrame(
         merges, "round int, piece string, a string, b string, cnt long, "
                 "score_micro long")
@@ -1745,12 +1875,14 @@ def tokenizer_fertility_compare(df, *, text_col: str = "text",
            .orderBy(F.col("freq").desc(), "word").limit(top_words))
 
     # The three trainers are independent given the shared frequency
-    # table, and each is a chain of driver-synchronous tiny jobs
-    # (argmax + checkpoint per round) whose wall time is job LATENCY,
-    # not compute — so run them as concurrent jobs from a small thread
-    # pool (guide §2.6: later jobs back-fill executors the current
-    # job's tail leaves idle). Results are bit-identical: each trainer
-    # reads only the materialized freq cache.
+    # table, and their wall time is job LATENCY, not compute: BPE is
+    # one vocabulary collect then driver-side rounds (below its vocab
+    # bound), WordPiece a chain of driver-synchronous tiny jobs (one
+    # argmax + lazy checkpoint per round) — so run them as concurrent
+    # jobs from a small thread pool (guide §2.6: later jobs back-fill
+    # executors the current job's tail leaves idle, and BPE's Python
+    # rounds overlap WordPiece's jobs). Results are bit-identical: each
+    # trainer reads only the materialized freq cache.
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=3) as pool:

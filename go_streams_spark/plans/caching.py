@@ -67,6 +67,15 @@ def _unpersist_all(dfs: list[DataFrame]) -> int:
     return n
 
 
+def release_checkpoint(df: DataFrame) -> None:
+    """Unpersist the RDD behind a ``localCheckpoint``'ed DataFrame.
+    ``DataFrame.unpersist`` does not reach it (the checkpoint persists
+    the RDD itself, not a cached query), so an iterative loop that
+    checkpoints every round releases each superseded round here. Safe
+    on a lazy checkpoint that was never computed."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def release_tracked() -> int:
     """Unpersist every GLOBALLY tracked DataFrame; returns how many were
     freed. Does not touch pins registered inside an active

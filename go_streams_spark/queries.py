@@ -8869,8 +8869,10 @@ def semdedup_prune_q(spark: SparkSession, sf_dir: str) -> DataFrame:
        T.bpe_pipeline_oracle_sql(rounds=8, emit="merges"))
 def bpe_train_merge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iterative BPE tokenizer training over the documents corpus: 8
-    merge rounds, each = vocabulary-grain pair count + driver argmax +
-    JVM fold rewrite + localCheckpoint (lineage truncation).
+    merge rounds. The vocabulary (one hash agg) is collected once and
+    every round runs in the driver's incremental trainer; vocabularies
+    above ``T._BPE_DRIVER_MAX_WORDS`` take the per-round distributed
+    loop (pair count + argmax job + JVM fold rewrite + localCheckpoint).
     Hash-checked against the generated unrolled-training oracle
     (text.bpe_pipeline_oracle_sql emit="merges" — sentinel-string
     replaces replay the greedy fold); independent Python-trainer parity

@@ -626,34 +626,60 @@ def test_semdedup_pairs_plan_no_cartesian(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_bpe_train_matches_python_reference(spark):
-    """bpe_train_merges equals a from-scratch Python BPE trainer (same
-    greedy left-to-right merge, count-desc/pair-asc tie-break) on a
-    corpus with evolving multi-char merges."""
-    docs = [(i, t) for i, t in enumerate(
-        ["low lower lowest", "low low newer newest", "wider new newer",
-         "lowest newest wide wide wider"])]
+def _count_jobs(spark, fn):
+    """Run ``fn`` inside a fresh Spark job group; return (its result,
+    the number of jobs the group launched)."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("path", ["driver", "distributed"])
+def test_bpe_train_matches_python_reference(spark, monkeypatch, path):
+    """Both bpe_train_merges paths equal a from-scratch Python BPE
+    trainer (same greedy left-to-right merge, count-desc/pair-asc
+    tie-break) on a corpus with evolving multi-char merges, repeated
+    symbols (a+a merges left to right only: aaaa -> aa|aa, aaa ->
+    aa|a) and pair-count ties, one of them decided by code-point order
+    where UTF-16 order would pick the other pair. The driver path
+    trains from one vocabulary collect; a bound of 0 forces the
+    per-round distributed loop."""
+    if path == "distributed":
+        monkeypatch.setattr(T, "_BPE_DRIVER_MAX_WORDS", 0)
+    texts = ["low lower lowest", "low low newer newest", "wider new newer",
+             "lowest newest wide wide wider", "aaaa aaa banana banana aaaa",
+             "x\U0001F600 " * 5 + "x\uFF5A " * 5]
+    docs = list(enumerate(texts))
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = [(r["round"], r["pair"], r["cnt"])
-           for r in T.bpe_train_merges(df, rounds=6).collect()]
+    rows, jobs = _count_jobs(
+        spark, lambda: T.bpe_train_merges(df, rounds=10).collect())
+    got = [(r["round"], r["pair"], r["cnt"]) for r in rows]
 
     from collections import Counter
     vocab = Counter()
     for _, t in docs:
         for tok in t.lower().split():
             vocab[tuple(tok)] += 1
-    expect = []
-    for r in range(6):
+    expect, ties = [], []
+    for r in range(10):
         pc = Counter()
         for syms, c in vocab.items():
             for x, y in zip(syms, syms[1:]):
                 pc[(x, y)] += c
         if not pc:
             break
-        best = min(pc.items(), key=lambda kv: (-kv[1], kv[0]))
-        (a, b), cnt = best
+        ranked = sorted(pc.items(), key=lambda kv: (-kv[1], kv[0]))
+        (a, b), cnt = ranked[0]
         if cnt < 2:
             break
+        if len(ranked) > 1 and ranked[1][1] == cnt:
+            ties.append(((a, b), ranked[1][0]))
         expect.append((r, a + b, cnt))
         new_vocab = Counter()
         for syms, c in vocab.items():
@@ -668,7 +694,27 @@ def test_bpe_train_matches_python_reference(spark):
             new_vocab[tuple(out)] += c
         vocab = new_vocab
     assert got == expect
-    assert len(got) == 6 and any(len(p) > 2 for _, p, _ in got)
+    assert len(got) == 10 and any(len(p) > 2 for _, p, _ in got)
+    assert got[0] == (0, "aa", 8)  # 3 + 3 + 2 non-overlapping a+a pairs
+    assert (("x", "\uFF5A"), ("x", "\U0001F600")) in ties
+    if path == "driver":
+        assert jobs <= 3
+    else:
+        assert jobs >= len(got)
+
+
+def test_trainers_release_round_checkpoints(spark, monkeypatch):
+    """The distributed loops of both merge trainers leave no persisted
+    RDD behind: every per-round localCheckpoint is released."""
+    monkeypatch.setattr(T, "_BPE_DRIVER_MAX_WORDS", 0)
+    df = spark.createDataFrame(
+        [(0, "low lower lowest newer newest"), (1, "low newer wider wide")],
+        "doc_id long, text string")
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    for train in (T.bpe_train_merges, T.wordpiece_train_merges):
+        before = persisted().size()
+        assert len(train(df, rounds=4).collect()) == 4
+        assert persisted().size() == before, train.__name__
 
 
 def test_sign_lsh_multiprobe_recall(spark, sf_dir):

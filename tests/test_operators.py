@@ -700,11 +700,24 @@ def test_unimax_water_fill_branches(spark):
 def test_wordpiece_empty_and_tiny_corpus(spark):
     """Degenerate corpora: an empty frame trains zero merges and emits
     an empty report; a one-word corpus below min_count still yields a
-    char-fallback segmentation (maximal munch never fails)."""
+    char-fallback segmentation (maximal munch never fails). BPE on the
+    driver path: the empty corpus gives zero merges in the unchanged
+    schema, and training stops early once the best pair falls below
+    min_count."""
     from go_streams_spark.functions import text as T
     empty = spark.createDataFrame([], "doc_id long, text string")
     assert T.wordpiece_train_merges(empty, rounds=2).count() == 0
     assert T.wordpiece_segment_report(empty).count() == 0
+
+    bpe_empty = T.bpe_train_merges(empty, rounds=3)
+    assert bpe_empty.schema.simpleString() == \
+        "struct<round:int,pair:string,a:string,b:string,cnt:bigint>"
+    assert bpe_empty.collect() == []
+    early = spark.createDataFrame([(1, "ab ab cd")],
+                                  "doc_id long, text string")
+    got = [tuple(r) for r in T.bpe_train_merges(early, rounds=5).collect()]
+    assert got == [(0, "ab", "a", "b", 2)]  # (c, d) = 1 < min_count
+    assert T.bpe_train_merges(early, rounds=5, min_count=3).collect() == []
 
     one = spark.createDataFrame([(1, "zq")], "doc_id long, text string")
     rep = T.wordpiece_segment_report(one, rounds=2, top_words=5).collect()
